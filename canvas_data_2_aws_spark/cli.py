@@ -24,16 +24,12 @@ from .sources.envelope import read_changeset_jsonl
 
 
 def cmd_initdb(args) -> int:
+    """Bootstrap (or re-bootstrap) one table from a snapshot. Staged and
+    committed like every other write, so a crash before the commit
+    leaves the table's previous data live."""
     spark = session.get_spark(app="cda2-initdb")
     df = session.load_table(spark, args.source_dir, args.table)
-    dest = os.path.join(args.replica, args.table)
-    df.write.mode("overwrite").parquet(dest)
-    if replica.has_manifest(args.replica):
-        man = replica.load(args.replica)
-        man["tables"][args.table] = {"dir": args.table}
-        man["version"] += 1
-        replica.commit(args.replica, man)
-        replica.vacuum(args.replica)
+    replica.publish(args.replica, {args.table: df})
     n = spark.read.parquet(replica.table_dir(args.replica, args.table)).count()
     print(f"initdb: {args.table} bootstrapped with {n} rows")
     return 0
@@ -41,15 +37,12 @@ def cmd_initdb(args) -> int:
 
 def cmd_syncdb(args) -> int:
     """Apply one changeset per table, then advance ALL tables (and the
-    high-water token) in ONE atomic manifest commit.
+    high-water token) in ONE atomic publish.
 
     Mirrors the reference's all-tables-or-nothing Postgres transaction
-    around per-table token updates `[public: DAP]`: every merged table
-    is staged to a fresh ``{table}__v{N}`` directory first; nothing the
-    current manifest references is touched. The single commit point is
-    the manifest's ``os.replace`` — a crash before it leaves the prior
-    manifest (old data, old token) fully intact, and the staged
-    directories are reclaimed by vacuum on the next run.
+    around per-table token updates `[public: DAP]`: a crash before
+    ``replica.publish`` commits leaves the prior replica (old data, old
+    token) fully intact.
     """
     spark = session.get_spark(app="cda2-syncdb")
     root = args.replica
@@ -60,10 +53,12 @@ def cmd_syncdb(args) -> int:
             file=sys.stderr,
         )
         return 2
-    replica.vacuum(root)  # reclaim leftovers from any crashed prior sync
-    man = replica.load(root)
-    new_ver = man["version"] + 1
-    staged: dict[str, str] = {}
+    if len(set(tables)) != len(tables):
+        # Both merges would read the same base and one changeset would
+        # silently replace the other while the token still advanced.
+        print("syncdb: each --table may be given only once", file=sys.stderr)
+        return 2
+    merged: dict = {}
     for table, changes_path, key in zip(tables, changes_list, keys):
         base = spark.read.parquet(replica.table_dir(root, table))
         changes = read_changeset_jsonl(
@@ -78,22 +73,13 @@ def cmd_syncdb(args) -> int:
         # (file order as the tie-break) BEFORE applying — without this
         # a changeset touching one key twice produces duplicate-PK rows
         # and order-dependent results (M3).
-        merged = apply_changeset(
+        merged[table] = apply_changeset(
             base,
             changes,
             keys=[key],
             compact_by=["_change_ts", "_change_seq"],
         )
-        rel = f"{table}__v{new_ver}"
-        merged.write.mode("overwrite").parquet(os.path.join(root, rel))
-        staged[table] = rel
-    for table, rel in staged.items():
-        man["tables"][table] = {"dir": rel}
-    man["version"] = new_ver
-    if args.token is not None:
-        man["token"] = args.token
-    replica.commit(root, man)  # <- the all-tables-or-nothing point
-    replica.vacuum(root)  # superseded versions are now unreferenced
+    replica.publish(root, merged, token=args.token)
     for table in tables:
         n = spark.read.parquet(replica.table_dir(root, table)).count()
         print(f"syncdb: {table} now {n} rows after merge")
@@ -174,15 +160,14 @@ def cmd_optimize(args) -> int:
     form of the graded compaction planner + Z-order layout ops).
     Clustering on the key keeps footer min/max selective, so post-
     compaction scans skip files on PK predicates. The rewrite commits
-    exactly like ``syncdb``: staged directory + atomic manifest
-    replace, so a crash mid-rewrite leaves the prior layout readable.
+    through ``replica.publish`` like every other write, so a crash
+    mid-rewrite leaves the prior layout readable.
     At 100 TB the same verb runs per partition off the manifest bins
     (`layout_compaction_bins`)."""
     import glob
 
     spark = session.get_spark(app="cda2-optimize")
     root = args.replica
-    replica.vacuum(root)
     path = replica.table_dir(root, args.table)
     files_before = glob.glob(f"{path}/part-*")
     bytes_total = sum(os.path.getsize(f) for f in files_before)
@@ -194,14 +179,7 @@ def cmd_optimize(args) -> int:
     clustered = df.repartitionByRange(target, F.col(args.key)).sortWithinPartitions(
         args.key
     )
-    man = replica.load(root)
-    new_ver = man["version"] + 1
-    rel = f"{args.table}__v{new_ver}"
-    clustered.write.mode("overwrite").parquet(os.path.join(root, rel))
-    man["tables"][args.table] = {"dir": rel}
-    man["version"] = new_ver
-    replica.commit(root, man)
-    replica.vacuum(root)
+    replica.publish(root, {args.table: clustered})
     new_path = replica.table_dir(root, args.table)
     files_after = glob.glob(f"{new_path}/part-*")
     n = spark.read.parquet(new_path).count()

@@ -73,14 +73,6 @@ def apply_changeset(
     return survivors.unionByName(upserts)
 
 
-def snapshot_load(df: DataFrame, path: str, partition_by: Sequence[str] = ()) -> None:
-    """Full-table bootstrap (M2, ``initdb``): replace-all at rest."""
-    writer = df.write.mode("overwrite")
-    if partition_by:
-        writer = writer.partitionBy(*partition_by)
-    writer.parquet(path)
-
-
 def snapshot_load_bucketed(
     df: DataFrame,
     table: str,

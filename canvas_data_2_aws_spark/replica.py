@@ -1,20 +1,26 @@
-"""Replica-root manifest: atomic multi-table commits for the sync CLI.
+"""Replica-root manifest: the one commit protocol for replica data.
 
 The reference pipeline commits each table's new high-water token in one
 Postgres transaction, so a crashed sync never leaves half the replica
 advanced `[public: DAP]`. Parquet directories have no transactions, so
-this module supplies the standard lakehouse-style substitute:
+this module supplies the standard lakehouse-style substitute, and it is
+the only module that knows the directory layout:
 
 - ``_manifest.json`` at the replica root is the single source of truth
   mapping table name -> current data directory (plus the sync token and
   a monotonically increasing version).
-- Every mutation (syncdb, optimize) writes NEW directories
+- Every writer (the CLI's initdb/syncdb/optimize, the streaming merge
+  sinks) goes through :func:`publish`: it stages NEW directories
   (``{table}__v{N}``), then swaps the manifest via write-temp +
   ``os.replace`` — atomic on POSIX. A crash at ANY earlier point leaves
   the prior manifest (and the directories it references) untouched;
-  the staged directories are garbage collected by :func:`vacuum`.
-- Readers resolve through :func:`table_dir`; replicas bootstrapped by
-  older layouts (no manifest) fall back to the plain ``{table}`` path.
+  staged leftovers are reclaimed by the next publish (a same-version
+  leftover is overwritten by its staging write, any other by
+  :func:`vacuum`).
+- Readers resolve through :func:`table_dir`. A table the manifest does
+  not name falls back to the plain ``{table}`` path, so a root written
+  before manifests existed stays readable and is upgraded by its next
+  publish (whose vacuum then reclaims the superseded plain directory).
 
 Single-process by design (matching the reference's one-scheduler
 deployment); concurrent writers would need a lock file or a real table
@@ -39,16 +45,32 @@ def load(root: str) -> dict:
     return {"version": 0, "token": None, "tables": {}}
 
 
-def has_manifest(root: str) -> bool:
-    return os.path.exists(os.path.join(root, MANIFEST))
-
-
 def table_dir(root: str, table: str) -> str:
     """Resolve a table's current data directory through the manifest
     (falling back to the plain ``{root}/{table}`` layout)."""
     man = load(root)
     rel = man["tables"].get(table, {}).get("dir", table)
     return os.path.join(root, rel)
+
+
+def publish(root: str, frames: dict, token: str | None = None) -> dict:
+    """Commit ``frames`` (table name -> DataFrame) and ``token`` as the
+    root's next version, all together or not at all: stage every frame
+    to ``{name}__v{N+1}``, point the manifest at the staged directories,
+    :func:`commit`, then :func:`vacuum` the superseded ones. Tables not
+    in ``frames`` keep their directories; ``token=None`` keeps the
+    token. Returns the committed manifest."""
+    man = load(root)
+    man["version"] += 1
+    for name, df in frames.items():
+        rel = f"{name}__v{man['version']}"
+        df.write.mode("overwrite").parquet(os.path.join(root, rel))
+        man["tables"][name] = {"dir": rel}
+    if token is not None:
+        man["token"] = token
+    commit(root, man)  # <- the all-tables-or-nothing point
+    vacuum(root)
+    return man
 
 
 def commit(root: str, manifest: dict) -> None:
@@ -65,12 +87,10 @@ def commit(root: str, manifest: dict) -> None:
 
 def vacuum(root: str) -> list[str]:
     """Delete data directories not referenced by the current manifest —
-    staged leftovers from a crashed sync, or superseded versions whose
-    post-commit cleanup was interrupted. No-op without a manifest
-    (legacy plain layout has no bookkeeping to trust). Returns the
-    removed directory names."""
-    if not has_manifest(root):
-        return []
+    staged leftovers from a crashed publish, or superseded versions.
+    Only names of tables the manifest manages are touched (their plain
+    directory or any ``__v`` version), so without a manifest this is a
+    no-op. Returns the removed directory names."""
     man = load(root)
     live = {e["dir"] for e in man["tables"].values()}
     removed = []
@@ -78,8 +98,6 @@ def vacuum(root: str) -> list[str]:
         full = os.path.join(root, name)
         if not os.path.isdir(full):
             continue
-        # Only reclaim names this module could have created: the plain
-        # table dir of a managed table, or any staged version of one.
         stem = name.split("__v")[0]
         if stem not in man["tables"]:
             continue

@@ -4,21 +4,21 @@ merge via ``foreachBatch`` — the streaming form of the reference's
 it and applies it to the current replica snapshot.
 
 Snapshot management: parquet can't be overwritten while being read, so
-the sink writes copy-on-write *versioned* snapshot directories
-(``v0, v1, …``) and a tiny ``_CURRENT`` pointer file — a minimal
-filesystem MVCC, the same commit shape Iceberg/Delta implement with a
-metadata log. Everything stays distributed: no driver-side collect of
-table data, ever.
+the sink's ``table_dir`` is a replica root (``replica.py``) holding a
+``data`` table, and every bootstrap and micro-batch commits through
+``replica.publish`` — copy-on-write staging plus one atomic manifest
+swap, the commit shape Iceberg/Delta implement with a metadata log.
+Everything stays distributed: no driver-side collect of table data,
+ever.
 """
 
 from __future__ import annotations
 
-import os
-import re
 from collections.abc import Sequence
 
 from pyspark.sql import DataFrame, SparkSession
 
+from .. import replica
 from ..operators.merge import apply_changeset
 
 
@@ -38,71 +38,34 @@ class StreamingMergeSink:
         self.keys = list(keys)
         self.compact_by = list(compact_by)
 
-    # -- snapshot bookkeeping --------------------------------------------
-
-    def _pointer(self) -> str:
-        return os.path.join(self.table_dir, "_CURRENT")
+    # -- snapshot reads ----------------------------------------------------
 
     def current_version(self) -> int:
-        try:
-            with open(self._pointer()) as fh:
-                return int(fh.read().strip())
-        except FileNotFoundError:
-            return -1
+        """The committed version: 0 before bootstrap, +1 per commit."""
+        return replica.load(self.table_dir)["version"]
+
+    def _read(self, table: str) -> DataFrame:
+        return self.spark.read.parquet(replica.table_dir(self.table_dir, table))
 
     def current_snapshot(self) -> DataFrame:
-        v = self.current_version()
-        if v < 0:
-            raise FileNotFoundError(f"no snapshot committed under {self.table_dir}")
-        return self.spark.read.parquet(os.path.join(self.table_dir, f"v{v}"))
-
-    def bootstrap(self, base: DataFrame) -> None:
-        """M2 snapshot load: commit version 0."""
-        base.write.mode("overwrite").parquet(os.path.join(self.table_dir, "v0"))
-        self._commit(0)
-
-    def _commit(self, version: int) -> None:
-        with open(self._pointer(), "w") as fh:
-            fh.write(str(version))
+        return self._read("data")
 
     # -- the merge loop ----------------------------------------------------
 
+    def bootstrap(self, base: DataFrame) -> None:
+        """M2 snapshot load: the first committed version."""
+        replica.publish(self.table_dir, {"data": base})
+
+    def _next(self, base: DataFrame, changes: DataFrame) -> dict:
+        """The tables one micro-batch commits, keyed by name."""
+        return {
+            "data": apply_changeset(
+                base, changes, keys=self.keys, compact_by=self.compact_by
+            )
+        }
+
     def apply_batch(self, changes: DataFrame, batch_id: int) -> None:
-        base = self.current_snapshot()
-        merged = apply_changeset(
-            base, changes, keys=self.keys, compact_by=self.compact_by
-        )
-        next_v = self.current_version() + 1
-        merged.write.mode("overwrite").parquet(
-            os.path.join(self.table_dir, f"v{next_v}")
-        )
-        self._commit(next_v)
-
-    # Strict snapshot-dir pattern: a prefix match on 'v' would also
-    # catch StreamingIVMSink's 'view_v{n}' directories and crash on
-    # int('iew_v0').
-    _SNAPSHOT_RE = re.compile(r"v(\d+)")
-
-    def _reclaimable(self, pattern: re.Pattern, keep_last: int) -> list[int]:
-        current = self.current_version()
-        out = []
-        for name in os.listdir(self.table_dir):
-            m = pattern.fullmatch(name)
-            if m and int(m.group(1)) <= current - keep_last:
-                out.append(int(m.group(1)))
-        return sorted(out)
-
-    def vacuum(self, keep_last: int = 2) -> list[int]:
-        """Drop snapshot versions older than the ``keep_last`` most
-        recent (the lakehouse VACUUM analog — a 100 TB replica cannot
-        retain every version). Never touches the committed pointer's
-        version; returns the versions removed."""
-        import shutil
-
-        removed = self._reclaimable(self._SNAPSHOT_RE, keep_last)
-        for v in removed:
-            shutil.rmtree(os.path.join(self.table_dir, f"v{v}"))
-        return removed
+        replica.publish(self.table_dir, self._next(self.current_snapshot(), changes))
 
     def start(self, change_stream: DataFrame, checkpoint_dir: str):
         """Run the merge loop with AvailableNow (bounded replay)."""
@@ -121,7 +84,8 @@ class StreamingIVMSink(StreamingMergeSink):
     the same changeset, never re-aggregating the replica. View deltas
     use exact decimal sums, so the maintained view equals a fresh
     recompute bit-for-bit (asserted in tests/test_streaming.py);
-    snapshot and view commit under the same MVCC version.
+    snapshot and view commit in the same ``replica.publish``, so a
+    reader never sees one advanced without the other.
     """
 
     def __init__(
@@ -148,22 +112,16 @@ class StreamingIVMSink(StreamingMergeSink):
         )
 
     def current_view(self) -> DataFrame:
-        v = self.current_version()
-        return self.spark.read.parquet(os.path.join(self.table_dir, f"view_v{v}"))
+        return self._read("view")
 
     def bootstrap(self, base: DataFrame) -> None:
-        self._view_agg(base).write.mode("overwrite").parquet(
-            os.path.join(self.table_dir, "view_v0")
-        )
-        super().bootstrap(base)
+        replica.publish(self.table_dir, {"data": base, "view": self._view_agg(base)})
 
-    def apply_batch(self, changes: DataFrame, batch_id: int) -> None:
+    def _next(self, base: DataFrame, changes: DataFrame) -> dict:
         from pyspark.sql import functions as F
 
         from ..operators.merge import compact_changeset
 
-        base = self.current_snapshot()
-        old_view = self.current_view()
         compacted = compact_changeset(changes, self.keys, self.compact_by)
         dec = F.col(self.view_sum).cast("decimal(28,6)")
         adds = compacted.where(F.col("action") == "U").select(
@@ -178,27 +136,12 @@ class StreamingIVMSink(StreamingMergeSink):
             (-dec).alias("total"),
         )
         new_view = (
-            old_view.unionByName(adds)
+            self.current_view()
+            .unionByName(adds)
             .unionByName(rems)
             .groupBy(self.view_group)
             .agg(F.sum("n").alias("n"), F.sum("total").alias("total"))
             .where(F.col("n") > 0)
         )
-        next_v = self.current_version() + 1
-        new_view.write.mode("overwrite").parquet(
-            os.path.join(self.table_dir, f"view_v{next_v}")
-        )
-        # Superclass merges the replica and commits next_v — the view
-        # written above becomes visible atomically with its snapshot.
-        super().apply_batch(changes, batch_id)
-
-    _VIEW_RE = re.compile(r"view_v(\d+)")
-
-    def vacuum(self, keep_last: int = 2) -> list[int]:
-        """Also reclaim view snapshots — each table version has a
-        paired ``view_v{n}`` that must age out with it."""
-        import shutil
-
-        for v in self._reclaimable(self._VIEW_RE, keep_last):
-            shutil.rmtree(os.path.join(self.table_dir, f"view_v{v}"))
-        return super().vacuum(keep_last)
+        # One publish commits the merged replica and its view together.
+        return {**super()._next(base, changes), "view": new_view}

@@ -86,13 +86,12 @@ def test_validate_verb_detects_drift(spark, sf_dir, tmp_path):
     # Drift: drop some rows from the replica in place (stage-then-swap).
     import shutil
 
-    drifted = spark.read.parquet(f"{replica}/orders").where(
-        F.col("o_orderkey") % 5 != 0
-    )
+    live = replica_mod.table_dir(replica, "orders")
+    drifted = spark.read.parquet(live).where(F.col("o_orderkey") % 5 != 0)
     staging = str(tmp_path / "vstaging")
     drifted.write.mode("overwrite").parquet(staging)
-    shutil.rmtree(f"{replica}/orders")
-    shutil.move(staging, f"{replica}/orders")
+    shutil.rmtree(live)
+    shutil.move(staging, live)
     assert cli.main(base_args) == 1
 
 
@@ -111,7 +110,7 @@ def test_syncdb_compacts_multi_change_per_pk(spark, sf_dir, tmp_path):
         )
         == 0
     )
-    base = spark.read.parquet(f"{replica}/orders")
+    base = spark.read.parquet(replica_mod.table_dir(replica, "orders"))
     k1, k2 = [r.o_orderkey for r in
               base.orderBy("o_orderkey").limit(2).collect()]
     row = base.where(F.col("o_orderkey") == k1).first().asDict()
@@ -172,14 +171,15 @@ def test_validate_detects_double_and_date_drift(spark, sf_dir, tmp_path):
     # matches read.parquet plans by path, so a later read of the
     # swapped-in corrupted files would silently serve pristine rows.
     backup = str(tmp_path / "ddbackup")
-    shutil.copytree(f"{replica}/orders", backup)
+    live = replica_mod.table_dir(replica, "orders")
+    shutil.copytree(live, backup)
 
     def swap(mutate):
         df = mutate(spark.read.parquet(backup))
         staging = str(tmp_path / "ddstaging")
         df.write.mode("overwrite").parquet(staging)
-        shutil.rmtree(f"{replica}/orders")
-        shutil.move(staging, f"{replica}/orders")
+        shutil.rmtree(live)
+        shutil.move(staging, live)
 
     # Corrupt a double column only — row count and PKs unchanged.
     swap(lambda df: df.withColumn(
@@ -208,16 +208,18 @@ def test_optimize_compacts_and_preserves_content(spark, sf_dir, tmp_path):
     )
     assert rc == 0
     # fragment the replica into many small files first
-    frag = spark.read.parquet(f"{replica}/orders").repartition(16)
-    frag.write.mode("overwrite").parquet(f"{replica}/orders__staging")
+    live = replica_mod.table_dir(replica, "orders")
+    frag = spark.read.parquet(live).repartition(16)
+    staging = str(tmp_path / "ostaging")
+    frag.write.mode("overwrite").parquet(staging)
     import shutil
 
-    shutil.rmtree(f"{replica}/orders")
-    shutil.move(f"{replica}/orders__staging", f"{replica}/orders")
-    before = spark.read.parquet(f"{replica}/orders")
+    shutil.rmtree(live)
+    shutil.move(staging, live)
+    before = spark.read.parquet(live)
     before_rows = before.count()
     before_sum = before.agg(F.sum("o_orderkey")).first()[0]
-    assert len(glob.glob(f"{replica}/orders/part-*")) >= 16
+    assert len(glob.glob(f"{live}/part-*")) >= 16
 
     rc = cli.main(
         [
@@ -256,14 +258,17 @@ def test_syncdb_multi_table_atomic_commit(spark, sf_dir, tmp_path):
         assert cli.main(
             ["initdb", "--table", t, "--source-dir", sf_dir, "--replica", replica]
         ) == 0
+    o_dir = replica_mod.table_dir(replica, "orders")
+    c_dir = replica_mod.table_dir(replica, "customer")
+    version_before = replica_mod.load(replica)["version"]
     o_keys = [r.o_orderkey for r in
-              spark.read.parquet(f"{replica}/orders")
+              spark.read.parquet(o_dir)
               .orderBy("o_orderkey").limit(3).collect()]
     c_keys = [r.c_custkey for r in
-              spark.read.parquet(f"{replica}/customer")
+              spark.read.parquet(c_dir)
               .orderBy("c_custkey").limit(2).collect()]
-    o_before = spark.read.parquet(f"{replica}/orders").count()
-    c_before = spark.read.parquet(f"{replica}/customer").count()
+    o_before = spark.read.parquet(o_dir).count()
+    c_before = spark.read.parquet(c_dir).count()
 
     rc = cli.main([
         "syncdb", "--replica", replica, "--token", "tok-42",
@@ -278,16 +283,16 @@ def test_syncdb_multi_table_atomic_commit(spark, sf_dir, tmp_path):
 
     man = replica_mod.load(replica)
     assert man["token"] == "tok-42"
-    assert man["version"] == 1
+    assert man["version"] == version_before + 1
     o_now = spark.read.parquet(replica_mod.table_dir(replica, "orders"))
     c_now = spark.read.parquet(replica_mod.table_dir(replica, "customer"))
     assert o_now.count() == o_before - len(o_keys)
     assert c_now.count() == c_before - len(c_keys)
-    # superseded plain dirs were vacuumed after the commit
+    # superseded dirs were vacuumed after the commit
     import os
 
-    assert not os.path.exists(f"{replica}/orders")
-    assert not os.path.exists(f"{replica}/customer")
+    assert not os.path.exists(o_dir)
+    assert not os.path.exists(c_dir)
 
 
 def test_syncdb_failed_midsync_leaves_prior_manifest(spark, sf_dir, tmp_path,
@@ -303,11 +308,11 @@ def test_syncdb_failed_midsync_leaves_prior_manifest(spark, sf_dir, tmp_path,
             ["initdb", "--table", t, "--source-dir", sf_dir, "--replica", replica]
         ) == 0
     o_keys = [r.o_orderkey for r in
-              spark.read.parquet(f"{replica}/orders")
+              spark.read.parquet(replica_mod.table_dir(replica, "orders"))
               .orderBy("o_orderkey").limit(2).collect()]
     ch = _delete_changeset(tmp_path, "ok.jsonl", "o_orderkey", o_keys)
 
-    # Establish a committed baseline (manifest v1, token tok-1).
+    # Establish a committed baseline (token tok-1).
     assert cli.main([
         "syncdb", "--replica", replica, "--token", "tok-1",
         "--table", "orders", "--changes", ch, "--key", "o_orderkey",
@@ -346,9 +351,11 @@ def test_syncdb_failed_midsync_leaves_prior_manifest(spark, sf_dir, tmp_path,
     assert spark.read.parquet(
         replica_mod.table_dir(replica, "customer")).count() == c_rows
 
-    # Staged v2 leftovers exist now, and the next sync reclaims them
-    # before re-staging (vacuum on entry), then commits cleanly.
-    leftovers = [d for d in os.listdir(replica) if d.endswith("__v2")]
+    # Staged leftovers of the failed version exist now; the next sync
+    # overwrites the one it re-stages, commits cleanly, and its vacuum
+    # reclaims the rest.
+    staged = f"__v{man_before['version'] + 1}"
+    leftovers = [d for d in os.listdir(replica) if d.endswith(staged)]
     assert leftovers
     assert cli.main([
         "syncdb", "--replica", replica, "--token", "tok-2",
@@ -357,6 +364,9 @@ def test_syncdb_failed_midsync_leaves_prior_manifest(spark, sf_dir, tmp_path,
     assert replica_mod.load(replica)["token"] == "tok-2"
     assert spark.read.parquet(
         replica_mod.table_dir(replica, "customer")).count() == c_rows - len(c_keys)
+    live = {e["dir"] for e in replica_mod.load(replica)["tables"].values()}
+    assert [d for d in os.listdir(replica) if d.endswith(staged)
+            and d not in live] == []
 
 
 def test_syncdb_failed_staging_leaves_prior_manifest(spark, sf_dir, tmp_path):
@@ -369,11 +379,13 @@ def test_syncdb_failed_staging_leaves_prior_manifest(spark, sf_dir, tmp_path):
         assert cli.main(
             ["initdb", "--table", t, "--source-dir", sf_dir, "--replica", replica]
         ) == 0
+    man_before = replica_mod.load(replica)
     o_keys = [r.o_orderkey for r in
-              spark.read.parquet(f"{replica}/orders")
+              spark.read.parquet(replica_mod.table_dir(replica, "orders"))
               .orderBy("o_orderkey").limit(2).collect()]
     ch = _delete_changeset(tmp_path, "s1.jsonl", "o_orderkey", o_keys)
-    o_before = spark.read.parquet(f"{replica}/orders").count()
+    o_before = spark.read.parquet(
+        replica_mod.table_dir(replica, "orders")).count()
 
     with pytest.raises(Exception):
         cli.main([
@@ -384,10 +396,103 @@ def test_syncdb_failed_staging_leaves_prior_manifest(spark, sf_dir, tmp_path):
             "--key", "c_custkey",
         ])
 
-    # No manifest was ever committed; both tables read their originals.
-    assert not replica_mod.has_manifest(replica)
+    # Nothing was committed; both tables read their originals.
+    assert replica_mod.load(replica) == man_before
     assert spark.read.parquet(
         replica_mod.table_dir(replica, "orders")).count() == o_before
+
+
+def test_initdb_failed_commit_keeps_live_table(spark, sf_dir, tmp_path,
+                                               monkeypatch):
+    """Re-bootstrapping a table stages and commits like syncdb: a crash
+    at the commit leaves the manifest and the table's live rows
+    untouched, even while that table still sits in its plain directory
+    (a root written before manifests existed). The next successful
+    initdb upgrades it and reclaims the plain directory."""
+    import os
+
+    import pytest
+
+    replica = str(tmp_path / "ireplica")
+    for t in ("orders", "customer"):
+        load_table(spark, sf_dir, t).write.parquet(os.path.join(replica, t))
+    c_keys = [r.c_custkey for r in
+              spark.read.parquet(replica_mod.table_dir(replica, "customer"))
+              .orderBy("c_custkey").limit(2).collect()]
+    assert cli.main([
+        "syncdb", "--replica", replica, "--token", "tok-1",
+        "--table", "customer",
+        "--changes", _delete_changeset(tmp_path, "ic.jsonl", "c_custkey", c_keys),
+        "--key", "c_custkey",
+    ]) == 0
+    man_before = replica_mod.load(replica)
+    assert "orders" not in man_before["tables"]  # still the plain directory
+    o_rows = spark.read.parquet(replica_mod.table_dir(replica, "orders")).count()
+
+    # A different source: only the even-keyed orders.
+    src = str(tmp_path / "isrc")
+    even = load_table(spark, sf_dir, "orders").where(F.col("o_orderkey") % 2 == 0)
+    even.write.parquet(os.path.join(src, "orders.parquet"))
+    even_rows = even.count()
+    assert even_rows != o_rows
+    argv = ["initdb", "--table", "orders", "--source-dir", src,
+            "--replica", replica]
+
+    def boom(*a, **kw):
+        raise OSError("simulated crash during manifest replace")
+
+    monkeypatch.setattr(replica_mod.os, "replace", boom)
+    with pytest.raises(OSError):
+        cli.main(argv)
+    monkeypatch.undo()
+
+    assert replica_mod.load(replica) == man_before
+    assert spark.read.parquet(
+        replica_mod.table_dir(replica, "orders")).count() == o_rows
+
+    assert cli.main(argv) == 0
+    assert spark.read.parquet(
+        replica_mod.table_dir(replica, "orders")).count() == even_rows
+    assert not os.path.exists(os.path.join(replica, "orders"))
+
+
+def test_syncdb_rejects_repeated_table(spark, sf_dir, tmp_path, capsys):
+    """Two changesets for one table in one syncdb would merge against
+    the same base and one would silently win: the verb must refuse
+    before staging anything, leaving data and token as they were."""
+    import os
+
+    replica = str(tmp_path / "rreplica")
+    assert cli.main(
+        ["initdb", "--table", "orders", "--source-dir", sf_dir,
+         "--replica", replica]
+    ) == 0
+    keys = [r.o_orderkey for r in
+            spark.read.parquet(replica_mod.table_dir(replica, "orders"))
+            .orderBy("o_orderkey").limit(3).collect()]
+    ch = [_delete_changeset(tmp_path, f"r{i}.jsonl", "o_orderkey", [k])
+          for i, k in enumerate(keys)]
+    assert cli.main([
+        "syncdb", "--replica", replica, "--token", "tok-1",
+        "--table", "orders", "--changes", ch[0], "--key", "o_orderkey",
+    ]) == 0
+    man_before = replica_mod.load(replica)
+    names_before = sorted(os.listdir(replica))
+    rows_before = spark.read.parquet(
+        replica_mod.table_dir(replica, "orders")).count()
+    capsys.readouterr()
+
+    rc = cli.main([
+        "syncdb", "--replica", replica, "--token", "tok-2",
+        "--table", "orders", "--changes", ch[1], "--key", "o_orderkey",
+        "--table", "orders", "--changes", ch[2], "--key", "o_orderkey",
+    ])
+    assert rc == 2
+    assert "--table" in capsys.readouterr().err
+    assert replica_mod.load(replica) == man_before
+    assert sorted(os.listdir(replica)) == names_before  # nothing staged
+    assert spark.read.parquet(
+        replica_mod.table_dir(replica, "orders")).count() == rows_before
 
 
 def test_cli_schema_compile_and_migrate(tmp_path, capsys):

@@ -110,7 +110,7 @@ def test_merge_sink_checkpoint_recovery(spark, sf_dir, tmp_path):
     changeset.where(F.col("o_orderkey") % 2 == 0).coalesce(1).write.parquet(f"{chg_dir}/b0")
     run()
     v_after_first = sink.current_version()
-    assert v_after_first >= 1
+    assert v_after_first >= 2  # v1 bootstrap, then at least one batch
 
     # restart with the same checkpoint after the odd half arrives
     changeset.where(F.col("o_orderkey") % 2 == 1).coalesce(1).write.parquet(f"{chg_dir}/b1")
@@ -132,6 +132,12 @@ def test_merge_sink_checkpoint_recovery(spark, sf_dir, tmp_path):
 
 
 def test_merge_sink_vacuum_keeps_current(spark, sf_dir, tmp_path):
+    """Every commit reclaims the version it supersedes and never the
+    live one: after bootstrap and three batches only the manifest's
+    live directory remains, and it reads the current snapshot."""
+    import os
+
+    from canvas_data_2_aws_spark import replica as replica_mod
     from canvas_data_2_aws_spark.session import load_table
     from canvas_data_2_aws_spark.streaming.merge_sink import StreamingMergeSink
 
@@ -142,10 +148,41 @@ def test_merge_sink_vacuum_keeps_current(spark, sf_dir, tmp_path):
     sink.bootstrap(orders)
     empty = orders.limit(0).withColumn("action", F.lit("U"))
     for b in range(3):
-        sink.apply_batch(empty, b)  # v1..v3
-    removed = sink.vacuum(keep_last=2)
-    assert removed == [0, 1]
-    assert sink.current_version() == 3
+        sink.apply_batch(empty, b)  # v2..v4
+    assert sink.current_version() == 4
+    live = replica_mod.load(sink.table_dir)["tables"]["data"]["dir"]
+    assert set(os.listdir(sink.table_dir)) == {replica_mod.MANIFEST, live}
+    assert sink.current_snapshot().count() == 100
+
+
+def test_merge_sink_failed_commit_keeps_prior_version(
+    spark, sf_dir, tmp_path, monkeypatch
+):
+    """A micro-batch whose commit dies must leave the sink readable at
+    its previous version with the previous rows: the commit is one
+    atomic manifest replace, never a truncated pointer file."""
+    from canvas_data_2_aws_spark import replica as replica_mod
+    from canvas_data_2_aws_spark.session import load_table
+    from canvas_data_2_aws_spark.streaming.merge_sink import StreamingMergeSink
+
+    orders = load_table(spark, sf_dir, "orders").limit(100)
+    sink = StreamingMergeSink(
+        spark, str(tmp_path / "t"), keys=["o_orderkey"], compact_by=["o_orderkey"]
+    )
+    sink.bootstrap(orders)
+    sink.apply_batch(orders.limit(0).withColumn("action", F.lit("U")), 0)
+    version = sink.current_version()
+    deletes = orders.limit(10).withColumn("action", F.lit("D"))
+
+    def boom(*a, **kw):
+        raise OSError("simulated crash during commit")
+
+    monkeypatch.setattr(replica_mod.os, "replace", boom)
+    with pytest.raises(OSError):
+        sink.apply_batch(deletes, 1)
+    monkeypatch.undo()
+
+    assert sink.current_version() == version
     assert sink.current_snapshot().count() == 100
 
 
@@ -336,11 +373,13 @@ def test_streaming_ivm_view_equals_recompute(spark, sf_dir, tmp_path):
 
 
 def test_ivm_sink_vacuum_reclaims_views(spark, sf_dir, tmp_path):
-    """vacuum on an IVM table must not crash on view_v* dirs (r1
-    ADVICE: int('iew_v0') ValueError) and must age paired view
-    snapshots out with their table versions."""
+    """Reclaiming superseded versions of an IVM table must not crash on
+    its view directories (r1 ADVICE: int('iew_v0') ValueError) and must
+    age each view out with its table version: after bootstrap and three
+    batches only the live data and view directories remain."""
     import os
 
+    from canvas_data_2_aws_spark import replica as replica_mod
     from canvas_data_2_aws_spark.session import load_table
     from canvas_data_2_aws_spark.streaming.merge_sink import StreamingIVMSink
 
@@ -356,12 +395,12 @@ def test_ivm_sink_vacuum_reclaims_views(spark, sf_dir, tmp_path):
     sink.bootstrap(orders)
     empty = orders.limit(0).withColumn("action", F.lit("U"))
     for b in range(3):
-        sink.apply_batch(empty, b)  # v1..v3 + view_v1..view_v3
-    removed = sink.vacuum(keep_last=2)
-    assert removed == [0, 1]
-    names = set(os.listdir(sink.table_dir))
-    assert {"v2", "v3", "view_v2", "view_v3"} <= names
-    assert not ({"v0", "v1", "view_v0", "view_v1"} & names)
+        sink.apply_batch(empty, b)  # data and view, v2..v4
+    assert sink.current_version() == 4
+    tables = replica_mod.load(sink.table_dir)["tables"]
+    assert set(os.listdir(sink.table_dir)) == {
+        replica_mod.MANIFEST, tables["data"]["dir"], tables["view"]["dir"]
+    }
     assert sink.current_snapshot().count() == 100
     assert sink.current_view().count() > 0
 
@@ -520,8 +559,8 @@ def test_stream_window_uniques_within_sketch_error(spark, sf_dir):
 
 def test_merge_sink_crash_recovery_exactly_once(spark, sf_dir, tmp_path):
     """Fault injection at the merge sink's worst-case point: the crash
-    lands AFTER a micro-batch's snapshot version commits (the _CURRENT
-    pointer moved) but BEFORE the checkpoint records the batch as
+    lands AFTER a micro-batch's snapshot version commits (the replica
+    manifest moved) but BEFORE the checkpoint records the batch as
     complete. On restart Spark replays that batch against the
     already-merged snapshot, so exactly-once through the sink rests on
     the keyed merge being idempotent under replay — assert the final
@@ -574,7 +613,7 @@ def test_merge_sink_crash_recovery_exactly_once(spark, sf_dir, tmp_path):
         q.awaitTermination()
     assert crash_flag.exists()
     # The doomed batch's snapshot DID commit before the crash:
-    assert sink.current_version() >= 2  # v0 bootstrap, v1 batch0, v2 batch1
+    assert sink.current_version() >= 3  # v1 bootstrap, v2 batch0, v3 batch1
 
     q2 = sink.start(stream(), ckpt_dir)
     q2.awaitTermination()
