@@ -30,7 +30,7 @@ def cmd_initdb(args) -> int:
     spark = session.get_spark(app="cda2-initdb")
     df = session.load_table(spark, args.source_dir, args.table)
     replica.publish(args.replica, {args.table: df})
-    n = spark.read.parquet(replica.table_dir(args.replica, args.table)).count()
+    n = replica.row_count(replica.table_dir(args.replica, args.table))
     print(f"initdb: {args.table} bootstrapped with {n} rows")
     return 0
 
@@ -70,9 +70,9 @@ def cmd_syncdb(args) -> int:
             seq_col="_change_seq",
         )
         # Compact multi-change-per-PK batches to the latest by meta.ts
-        # (file order as the tie-break) BEFORE applying — without this
-        # a changeset touching one key twice produces duplicate-PK rows
-        # and order-dependent results (M3).
+        # (file order, then line order, as the tie-break) BEFORE
+        # applying — without this a changeset touching one key twice
+        # produces duplicate-PK rows and order-dependent results (M3).
         merged[table] = apply_changeset(
             base,
             changes,
@@ -81,7 +81,7 @@ def cmd_syncdb(args) -> int:
         )
     replica.publish(root, merged, token=args.token)
     for table in tables:
-        n = spark.read.parquet(replica.table_dir(root, table)).count()
+        n = replica.row_count(replica.table_dir(root, table))
         print(f"syncdb: {table} now {n} rows after merge")
     return 0
 
@@ -182,7 +182,7 @@ def cmd_optimize(args) -> int:
     replica.publish(root, {args.table: clustered})
     new_path = replica.table_dir(root, args.table)
     files_after = glob.glob(f"{new_path}/part-*")
-    n = spark.read.parquet(new_path).count()
+    n = replica.row_count(new_path)
     print(
         f"optimize: {args.table} rewrote {len(files_before)} files "
         f"({bytes_total >> 20} MiB) into {len(files_after)} "
@@ -248,7 +248,10 @@ def main(argv: list[str] | None = None) -> int:
     )
     p_sync.add_argument(
         "--changes", required=True, action="append",
-        help="JSONL envelope file/dir (one per --table)",
+        help="JSONL envelope file/dir (one per --table); two changes to"
+             " one key with the same meta.ts resolve in file order (the"
+             " lexicographic order of a directory's file paths), then"
+             " line order, the later one winning",
     )
     p_sync.add_argument(
         "--key", required=True, action="append",

@@ -17,6 +17,15 @@ the only module that knows the directory layout:
   staged leftovers are reclaimed by the next publish (a same-version
   leftover is overwritten by its staging write, any other by
   :func:`vacuum`).
+- The staging writes of one publish run concurrently, one pool thread
+  per table, so a multi-table sync's small write jobs share the
+  executor slots instead of queueing behind each other. Each thread
+  inherits the caller's job group and local properties
+  (``inheritable_thread_target``), and the pool is joined — the first
+  failure re-raised — before the manifest is touched, so concurrency
+  does not change the all-or-nothing commit.
+- Row counts come from the parquet footers (:func:`row_count`), not a
+  Spark re-scan of data just written.
 - Readers resolve through :func:`table_dir`. A table the manifest does
   not name falls back to the plain ``{table}`` path, so a root written
   before manifests existed stays readable and is upgraded by its next
@@ -32,6 +41,9 @@ from __future__ import annotations
 import json
 import os
 import shutil
+from concurrent.futures import ThreadPoolExecutor
+
+from pyspark.util import inheritable_thread_target
 
 MANIFEST = "_manifest.json"
 
@@ -53,19 +65,50 @@ def table_dir(root: str, table: str) -> str:
     return os.path.join(root, rel)
 
 
+def row_count(path: str) -> int:
+    """Rows in a parquet directory, summed from the file footers.
+    Like Spark, skips ``_``/``.`` files (``_SUCCESS``, ``.crc``)."""
+    # Imported here: it adds ~50 ms to every import of the package, and
+    # only the replica-writing verbs count rows.
+    import pyarrow.parquet as pq
+
+    return sum(
+        pq.read_metadata(os.path.join(path, name)).num_rows
+        for name in os.listdir(path)
+        if not name.startswith(("_", "."))
+    )
+
+
 def publish(root: str, frames: dict, token: str | None = None) -> dict:
     """Commit ``frames`` (table name -> DataFrame) and ``token`` as the
     root's next version, all together or not at all: stage every frame
     to ``{name}__v{N+1}``, point the manifest at the staged directories,
     :func:`commit`, then :func:`vacuum` the superseded ones. Tables not
     in ``frames`` keep their directories; ``token=None`` keeps the
-    token. Returns the committed manifest."""
+    token. Returns the committed manifest.
+
+    The staging writes run concurrently on a pool of ``len(frames)``
+    threads, each wrapped by ``inheritable_thread_target`` so its jobs
+    keep the caller's job group and local properties. The pool is
+    joined before the commit and the first failed write is re-raised,
+    so a failure leaves the prior manifest live. ``commit`` and
+    ``vacuum`` run on the calling thread."""
     man = load(root)
     man["version"] += 1
-    for name, df in frames.items():
-        rel = f"{name}__v{man['version']}"
-        df.write.mode("overwrite").parquet(os.path.join(root, rel))
-        man["tables"][name] = {"dir": rel}
+    with ThreadPoolExecutor(max_workers=max(1, len(frames))) as pool:
+        staged = []
+        for name, df in frames.items():
+            rel = f"{name}__v{man['version']}"
+            # Wrapped on the caller's thread, once per task: wrapping
+            # captures a copy of the caller's local properties, so each
+            # write gets its own copy to set its SQL execution id in.
+            write = inheritable_thread_target(df.sparkSession)(
+                df.write.mode("overwrite").parquet
+            )
+            staged.append(pool.submit(write, os.path.join(root, rel)))
+            man["tables"][name] = {"dir": rel}
+        for future in staged:
+            future.result()
     if token is not None:
         man["token"] = token
     commit(root, man)  # <- the all-tables-or-nothing point

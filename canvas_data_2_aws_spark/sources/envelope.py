@@ -113,15 +113,25 @@ def read_changeset_jsonl(
     form; the streaming twin is ``spark.readStream.text`` + the same
     ``decode_envelope``).
 
-    ``seq_col`` attaches a monotonically increasing id BEFORE the
-    decode — for text sources Spark's splits follow file offsets, so
-    the id is consistent with line order and serves as the in-file
-    tie-break when two changes to one PK share a ``meta.ts``.
+    ``seq_col`` attaches each line's position in file order BEFORE the
+    decode, as a ``struct<file, line>`` that orders like the pair: the
+    tie-break when two changes to one PK share a ``meta.ts``. File
+    order is the lexicographic order of the files' paths, whatever
+    their sizes (Spark packs a directory's files into partitions
+    largest first, so a bare per-line id would not follow it). Within
+    a file, ``monotonically_increasing_id`` follows line order: a text
+    file's splits are read in offset order.
     """
     records = spark.read.text(path)
     passthrough = []
     if seq_col is not None:
-        records = records.withColumn(seq_col, F.monotonically_increasing_id())
+        records = records.withColumn(
+            seq_col,
+            F.struct(
+                F.col("_metadata.file_path").alias("file"),
+                F.monotonically_increasing_id().alias("line"),
+            ),
+        )
         passthrough = [seq_col]
     return decode_envelope(
         records,

@@ -495,6 +495,101 @@ def test_syncdb_rejects_repeated_table(spark, sf_dir, tmp_path, capsys):
         replica_mod.table_dir(replica, "orders")).count() == rows_before
 
 
+def test_syncdb_ties_resolve_in_file_order(spark, sf_dir, tmp_path):
+    """Two changes to one key with the same meta.ts in a changeset
+    directory: the one in the later file (lexicographic path order)
+    wins, whatever the file sizes. Spark packs a directory's files into
+    partitions largest first, so a per-line id alone would let the
+    small earlier file win."""
+    import json
+
+    replica = str(tmp_path / "fo_replica")
+    assert cli.main(
+        ["initdb", "--table", "orders", "--source-dir", sf_dir,
+         "--replica", replica]
+    ) == 0
+    base = spark.read.parquet(replica_mod.table_dir(replica, "orders"))
+    row = base.orderBy("o_orderkey").first().asDict()
+    key = row["o_orderkey"]
+    rows_before = base.count()
+
+    def upsert(status):
+        val = {c: v for c, v in row.items() if c != "o_orderkey"}
+        val["o_orderstatus"] = status
+        val["o_orderdate"] = str(val["o_orderdate"])
+        return json.dumps({"key": {"o_orderkey": key}, "value": val,
+                           "meta": {"action": "U", "ts": 5}})
+
+    # Deletes of keys the table never held pad the later file.
+    absent = max(r.o_orderkey for r in base.select("o_orderkey").collect()) + 1
+    padding = [
+        json.dumps({"key": {"o_orderkey": absent + i},
+                    "meta": {"action": "D", "ts": 5}})
+        for i in range(2000)
+    ]
+    changes = tmp_path / "fo_changes"
+    changes.mkdir()
+    (changes / "part-0000.jsonl").write_text(upsert("A") + "\n")
+    (changes / "part-0001.jsonl").write_text(
+        "\n".join([upsert("B"), *padding]) + "\n"
+    )
+
+    assert cli.main(
+        ["syncdb", "--table", "orders", "--changes", str(changes),
+         "--key", "o_orderkey", "--replica", replica]
+    ) == 0
+    merged = spark.read.parquet(replica_mod.table_dir(replica, "orders"))
+    rows = merged.where(F.col("o_orderkey") == key).collect()
+    assert len(rows) == 1 and rows[0].o_orderstatus == "B"
+    assert merged.count() == rows_before
+
+
+def test_printed_row_counts_match_spark(spark, sf_dir, tmp_path, capsys):
+    """initdb, syncdb and optimize print row counts read from the
+    committed parquet footers; each must equal a Spark count of the
+    same directory, including a table a sync deletes down to 0 rows."""
+    import re
+
+    replica = str(tmp_path / "cnt_replica")
+
+    def printed():
+        return [int(n) for n in re.findall(r"(\d+) rows", capsys.readouterr().out)]
+
+    def spark_count(table):
+        return spark.read.parquet(replica_mod.table_dir(replica, table)).count()
+
+    for t in ("orders", "region"):
+        assert cli.main(
+            ["initdb", "--table", t, "--source-dir", sf_dir, "--replica", replica]
+        ) == 0
+        assert printed() == [spark_count(t)]
+    assert spark_count("region") > 0
+
+    o_keys = [r.o_orderkey for r in
+              spark.read.parquet(replica_mod.table_dir(replica, "orders"))
+              .orderBy("o_orderkey").limit(3).collect()]
+    r_keys = [r.r_regionkey for r in
+              spark.read.parquet(replica_mod.table_dir(replica, "region"))
+              .collect()]
+    assert cli.main([
+        "syncdb", "--replica", replica,
+        "--table", "orders",
+        "--changes", _delete_changeset(tmp_path, "co.jsonl", "o_orderkey", o_keys),
+        "--key", "o_orderkey",
+        "--table", "region",
+        "--changes", _delete_changeset(tmp_path, "cr.jsonl", "r_regionkey", r_keys),
+        "--key", "r_regionkey",
+    ]) == 0
+    assert printed() == [spark_count("orders"), spark_count("region")]
+    assert spark_count("region") == 0
+
+    assert cli.main(
+        ["optimize", "--table", "orders", "--replica", replica,
+         "--key", "o_orderkey", "--target-mb", "1"]
+    ) == 0
+    assert printed() == [spark_count("orders")]
+
+
 def test_cli_schema_compile_and_migrate(tmp_path, capsys):
     import json
 
